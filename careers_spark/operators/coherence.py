@@ -844,9 +844,16 @@ def resolve(
         eligible_turns, ["conv_id", "turn_idx"], "left_semi"
     )
 
+    # explicit hash repartition on `bucket`: AQE coalesces the cogroup
+    # shuffle to its 1 MB minimum partition size, which at the usual
+    # sub-MB volume put the whole python resolver in ONE task. A
+    # repartition with an explicit count is never coalesced, and the
+    # cogroup reuses it as its required distribution (no extra shuffle);
+    # n_buckets still bounds the conversations per pandas group.
+    n_parts = spark.sparkContext.defaultParallelism
     bucket = lambda df: df.withColumn(  # noqa: E731
         "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets))
-    )
+    ).repartition(n_parts, "bucket")
 
     _EMPTY_NAMES = np.empty(0, dtype=object)
 

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from careers_spark.functions.text import tokenize_udf
+
 MIN_TOPIC_REL_WEIGHT = 1e-5  # reference: AmbiguityForest.scala:94-95
 
 
@@ -58,10 +60,34 @@ def attach_candidates_coded(
     )
 
 
+def context_terms(top_ctx: DataFrame) -> DataFrame:
+    """Tokenize topic context NAMES into (topic, term, weight1) rows —
+    the corpus-independent half of the topic term vectors, built once
+    in the dictionary phase (KGPipeline stage `dict_context_terms`) so
+    no corpus pass runs the python tokenizer over dictionary strings.
+    A term shared by two contexts of one topic yields two rows;
+    tfidf_context_scores sums them.
+
+    The explicit repartition matters: top_ctx often reads back from a
+    small checkpoint parquet (one input split), and without it the
+    explode fan-out + python tokenizer of millions of context names
+    runs in ONE task — a serial chunk no executor count can shrink."""
+    sc = top_ctx.sparkSession.sparkContext
+    return (
+        top_ctx.select("topic", "context", "weight1")
+        .repartition(2 * sc.defaultParallelism)
+        .select(
+            "topic",
+            F.explode(F.array_distinct(tokenize_udf(F.col("context")))).alias("term"),
+            "weight1",
+        )
+    )
+
+
 def tfidf_context_scores(
     candidates: DataFrame,
     transcripts: DataFrame,
-    top_ctx: DataFrame,
+    ctx_terms: DataFrame,
     word_doc_freq: DataFrame,
     n_docs: int,
     turn_terms: DataFrame | None = None,
@@ -74,8 +100,9 @@ def tfidf_context_scores(
     frequencies from WordInTopicCount feed the idf). Re-expressed as
     joins:
 
-      topic term vectors : context NAMES tokenized, term weight =
-                           ctx_weight * idf(term)        (broadcast dim)
+      topic term vectors : tokenized context names (ctx_terms), term
+                           weight = sum of weight1 * idf(term)
+                                                         (broadcast dim)
       turn term vectors  : turn tokens restricted to terms that occur in
                            ANY topic vector (broadcast semi-join BEFORE
                            the explode shuffle — the term dimension is
@@ -88,12 +115,14 @@ def tfidf_context_scores(
     reduces to the anchor prior exactly, so enabling this on corpora
     whose context names never appear in text is a no-op.
 
+    ctx_terms: (topic_col, term, weight1) rows from context_terms().
+
     turn_terms: optional precomputed (conv_id, turn_idx, term) table,
     distinct per turn — lets the pipeline tokenize the corpus ONCE and
     share the pass with word_doc_freq instead of re-tokenizing here.
 
     topic_col: name of the topic-key column shared by `candidates` and
-    `top_ctx` — "topic" (strings) or a dictionary-coded "topic_id"
+    `ctx_terms` — "topic" (strings) or a dictionary-coded "topic_id"
     (ints; the pipeline's 100 TB posture, keeping strings off every
     shuffle of this stage).
 
@@ -106,25 +135,15 @@ def tfidf_context_scores(
     the corpus vocabulary (a semi-join) BEFORE the candidate explode;
     norms are computed on the FULL vectors first, so results are exact.
     """
-    from careers_spark.functions.text import tokenize_udf
-
     idf = word_doc_freq.select(
         "word", F.log(F.lit(float(n_docs + 1)) / (F.col("doc_freq") + 1)).alias("idf")
     )
 
     # topic term vectors are consumed four times below (vocabulary
-    # broadcast, norms, active shrink, dot join) — materialize once so
-    # the top-K window over the full link-weights table doesn't recompute
-    # per consumer (dim-sized: topics x tokenized top-30 context names).
-    # The explicit repartition matters: top_ctx often reads back from a
-    # small checkpoint parquet (one input split), and without it the
-    # explode fan-out + python tokenizer of millions of context names
-    # runs in ONE task — a serial chunk no executor count can shrink.
-    sc = top_ctx.sparkSession.sparkContext
+    # broadcast, norms, active shrink, dot join) — materialize once
+    # (dim-sized: topics x tokenized top-30 context names)
     topic_terms = (
-        top_ctx.select(topic_col, "context", "weight1")
-        .repartition(2 * sc.defaultParallelism)
-        .withColumn("term", F.explode(F.array_distinct(tokenize_udf(F.col("context")))))
+        ctx_terms.select(topic_col, "term", "weight1")
         .join(idf.withColumnRenamed("word", "term"), "term", "left")
         .na.fill({"idf": 1.0})
         .groupBy(topic_col, "term")

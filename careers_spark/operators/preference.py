@@ -37,6 +37,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+# bounds of the in-process (numpy) MM path: arms, and rows of the
+# pairwise n_tot matrix it collects — k arms can carry up to k^2 pairs,
+# so the arm bound alone does not bound the collect
+NUMPY_MAX_ARMS = 100_000
+NUMPY_MAX_PAIRS = 2_000_000
+
 
 def bradley_terry_strength(
     comparisons: DataFrame,
@@ -105,8 +111,9 @@ def bradley_terry_strength(
     # lattice re-entry pins the iterates (the pagerank lockstep
     # argument — pre-round sum-order noise ~1e-16 sits far below the
     # rounded digit in BOTH engines); the final ranking stays in
-    # Spark. Larger arm sets keep the cluster loop below.
-    if k <= 100_000:
+    # Spark. Larger arm sets or pair matrices keep the cluster loop
+    # below (ntot is checkpointed, so its count is cheap).
+    if k <= NUMPY_MAX_ARMS and ntot.count() <= NUMPY_MAX_PAIRS:
         import numpy as np
 
         from careers_spark.operators.similarity import _np_round_half_up

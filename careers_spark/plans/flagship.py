@@ -46,9 +46,9 @@ def kg_run_in_memory(
     if tfidf:
         wdf = D.word_doc_freq(transcripts)
         n_turns = transcripts.count()
-        top_ctx = D.top_contexts(link_w)
+        ctx_terms = L.context_terms(D.top_contexts(link_w))
         cands = (
-            L.tfidf_context_scores(cands, transcripts, top_ctx, wdf, n_docs=n_turns)
+            L.tfidf_context_scores(cands, transcripts, ctx_terms, wdf, n_docs=n_turns)
             .withColumn("prior", F.col("score"))
             .drop("score", "ctx_cos")
         )

@@ -19,17 +19,32 @@ from __future__ import annotations
 import json
 import os
 import time
+import uuid
 from dataclasses import dataclass, field
 
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyarrow import fs as pa_fs
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from careers_spark.functions.text import tokenize_udf
 from careers_spark.operators import canonicalize as CZ
 from careers_spark.operators import coherence as CO
 from careers_spark.operators import dictionary as D
 from careers_spark.operators import graph as G
 from careers_spark.operators import linking as L
 from careers_spark.operators import mentions as M
+
+# one row per stage output file; appended to `<work_dir>/_lineage/`
+_LINEAGE_SCHEMA = pa.schema(
+    [
+        ("file", pa.string()),
+        ("rows_out", pa.int64()),
+        ("checksum", pa.int64()),
+        ("stage", pa.string()),
+    ]
+)
 
 
 @dataclass
@@ -65,13 +80,25 @@ class KGPipeline:
         os.makedirs(work_dir, exist_ok=True)
 
     def _flush_lineage(self) -> None:
+        """Append the accumulated lineage rows as one parquet file under
+        `_lineage/`, written in-process with pyarrow so a flush starts
+        no Spark job (the rows are a handful per stage)."""
         if not self._lineage:
             return
-        self.spark.createDataFrame(
-            self._lineage,
-            schema="file string, rows_out long, checksum long, stage string",
-        ).coalesce(1).write.mode("append").parquet(
-            os.path.join(self.work_dir, "_lineage")
+        table = pa.Table.from_pydict(
+            dict(zip(_LINEAGE_SCHEMA.names, zip(*self._lineage))),
+            schema=_LINEAGE_SCHEMA,
+        )
+        uri = self.work_dir
+        if "://" not in uri and not uri.startswith("file:"):
+            uri = os.path.abspath(uri)
+        filesystem, root = pa_fs.FileSystem.from_uri(uri)
+        out_dir = f"{root.rstrip('/')}/_lineage"
+        filesystem.create_dir(out_dir, recursive=True)
+        pq.write_table(
+            table,
+            f"{out_dir}/part-{uuid.uuid4().hex}.parquet",
+            filesystem=filesystem,
         )
         self._lineage = []
 
@@ -151,8 +178,6 @@ class KGPipeline:
             )
             rows = sum(r.rows_out for r in lineage_rows)
         else:
-            import pyarrow.parquet as pq
-
             local_dir = out_dir[len("file:"):] if out_dir.startswith("file:") else out_dir
             rows = 0
             n_files = 0
@@ -236,9 +261,25 @@ class KGPipeline:
             return lw
 
         link_w = st("dict_link_weights", _link_weights)
-        st(
+        ctx_vectors = st(
             "dict_context_vectors",
             lambda: D.topic_context_vectors(D.top_contexts(link_w)),
+        )
+        # top-K contexts come from the MATERIALIZED packed vectors —
+        # re-running top_contexts() would repeat the window sort over
+        # the full link-weights table
+        st(
+            "dict_context_terms",
+            lambda: L.context_terms(
+                ctx_vectors.select(
+                    "topic",
+                    F.explode(F.arrays_zip("ctx_ids", "ctx_ws")).alias("z"),
+                ).select(
+                    "topic",
+                    F.col("z.ctx_ids").alias("context"),
+                    F.col("z.ctx_ws").alias("weight1"),
+                )
+            ),
         )
         st(
             "canonical_map",
@@ -315,8 +356,7 @@ class KGPipeline:
                 # linking score; no term overlap -> identity on priors).
                 # The corpus is tokenized ONCE (turn_terms stage) and the
                 # pass is shared by word_doc_freq + the cosine joins.
-                from careers_spark.functions.text import tokenize_udf
-
+                ctx_terms = dict_outputs["dict_context_terms"]
                 # cosine dot products only ever touch terms that occur in
                 # topic context NAMES — a dictionary-sized vocabulary. The
                 # scan-side explode is semi-joined to it immediately, so
@@ -324,17 +364,7 @@ class KGPipeline:
                 # not the full corpus token stream (30x+ at bench scale).
                 # Per-term doc frequencies (hence idf) are unchanged by
                 # dropping other terms, so scoring is exact.
-                vocab = (
-                    dict_outputs["dict_context_vectors"]
-                    .select(F.explode("ctx_ids").alias("context"))
-                    .distinct()
-                    .select(
-                        F.explode(
-                            F.array_distinct(tokenize_udf(F.col("context")))
-                        ).alias("term")
-                    )
-                    .distinct()
-                )
+                vocab = ctx_terms.select("term").distinct()
                 turn_terms = self.stage(
                     run,
                     "turn_terms",
@@ -356,31 +386,15 @@ class KGPipeline:
                 n_turns = next(
                     s.rows for s in run.stages if s.name == "transcripts"
                 )
-                # top-K contexts come from the MATERIALIZED packed
-                # vectors (dict phase) — re-running top_contexts() here
-                # would repeat the window sort over the full link-weights
-                # table inside the corpus phase
-                top_ctx = (
-                    dict_outputs["dict_context_vectors"]
-                    .select(
-                        "topic",
-                        F.explode(F.arrays_zip("ctx_ids", "ctx_ws")).alias("z"),
-                    )
-                    .select(
-                        "topic",
-                        F.col("z.ctx_ids").alias("context"),
-                        F.col("z.ctx_ws").alias("weight1"),
-                    )
-                )
                 if coded:
-                    top_ctx = top_ctx.join(
+                    ctx_terms = ctx_terms.join(
                         F.broadcast(topic_dim), "topic"
                     ).drop("topic")
                 cands = self.stage(
                     run,
                     "candidates",
                     lambda: L.tfidf_context_scores(
-                        cands, transcripts, top_ctx, wdf,
+                        cands, transcripts, ctx_terms, wdf,
                         n_docs=n_turns, turn_terms=turn_terms,
                         topic_col="topic_id" if coded else "topic",
                     )

@@ -3,6 +3,18 @@
 Local-mode testing uses ``local[N]``; on a real cluster the same builder
 runs unmodified under ``spark-submit --py-files`` — every knob here is
 either scale-neutral (AQE, Arrow) or derived from the cpu count.
+
+Fixed cost per python task: every task that runs a python UDF
+(pandas_udf, mapInPandas, applyInPandas) costs ~0.3 s of wall per task
+slot before the UDF starts. Measured on a 4-vCPU host, local[4]: a
+trivial pandas_udf over 4, 16 and 64 partitions took 0.33-0.35 s per
+task longer than the same job without it. Most of it is PySpark's
+worker calling ``importlib.invalidate_caches()`` once per task, which
+makes every zip importer over ``pyspark.zip`` re-read the archive
+directory (~0.15 s per call in one process). On small inputs this, not
+the rows, dominates a stage, so count the python tasks a new stage adds
+to each ``run_corpus`` pass (partitions x python stages) as its cost,
+and keep dictionary-sized python work in ``run_dictionary``.
 """
 
 from __future__ import annotations

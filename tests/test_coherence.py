@@ -184,3 +184,38 @@ def test_dense_path_through_spark_stage(spark):
     # paths must walk identically; the mixed winner set shows the
     # cascade genuinely propagated rather than one topic sweeping
     assert {t for (_, _, t, _) in dense} == {"Main:TA", "Main:TB"}
+
+
+def test_resolve_keeps_default_parallelism(spark):
+    """A resolve input far below AQE's 1 MB minimum partition size still
+    runs on defaultParallelism partitions — AQE must not coalesce the
+    cogroup shuffle into one python task."""
+    rows = [
+        (f"c{c}", 0, 0, 0, "rice", topic, pr)
+        for c in range(40)
+        for topic, pr in (("Main:Rice", 0.7), ("Main:Condoleezza Rice", 0.3))
+    ]
+    cands = spark.createDataFrame(
+        pd.DataFrame(
+            rows,
+            columns=["conv_id", "turn_idx", "start", "end",
+                     "surface", "topic", "prior"],
+        )
+    )
+    transcripts = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "conv_id": [f"c{c}" for c in range(40)],
+                "turn_idx": pd.array([0] * 40, dtype="int32"),
+                "role": ["user"] * 40,
+                "text": ["rice"] * 40,
+                "tool": [""] * 40,
+                "ts": pd.to_datetime([c * 60 for c in range(40)], unit="s"),
+            }
+        ),
+        schema=S.TRANSCRIPTS,
+    )
+    ctx = {"Main:Rice": {"cx": 1.0}, "Main:Condoleezza Rice": {"cy": 1.0}}
+    out = CO.resolve(cands, transcripts, ctx)
+    assert out.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+    assert CO.links_of(out).count() == 40

@@ -156,3 +156,96 @@ def test_empty_stage_output_records_zero_rows(spark, tmp_path):
     assert out.count() == 0
     assert run.stages[-1].rows == 0
     assert not run.stages[-1].resumed
+
+
+def test_flush_lineage_starts_no_spark_job(spark, tmp_path):
+    p = KGPipeline(spark, str(tmp_path / "w"))
+    p._lineage = [("f0.parquet", 3, None, "s0"), ("f1.parquet", 4, 17, "s1")]
+    sc = spark.sparkContext
+    sc.setJobGroup("flush_lineage_probe", "lineage flush")
+    try:
+        p._flush_lineage()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("flush_lineage_probe")) == []
+    assert p._lineage == []
+    lin = spark.read.parquet(str(tmp_path / "w" / "_lineage"))
+    assert sorted(tuple(r) for r in lin.collect()) == [
+        ("f0.parquet", 3, None, "s0"),
+        ("f1.parquet", 4, 17, "s1"),
+    ]
+
+
+def test_lineage_schema(spark, kb, work_dir):
+    transcripts = spark.createDataFrame(
+        synth.gen_transcripts_pdf(kb, 5), schema=S.TRANSCRIPTS
+    )
+    KGPipeline(spark, work_dir).run(transcripts, synth.kb_tables(spark, kb))
+    lin = spark.read.parquet(f"{work_dir}/_lineage")
+    assert lin.schema.simpleString() == (
+        "struct<file:string,rows_out:bigint,checksum:bigint,stage:string>"
+    )
+    assert {"dict_context_terms", "mentions", "edges"} <= {
+        r.stage for r in lin.select("stage").distinct().collect()
+    }
+
+
+def test_resume_dictionary_checkpoint_without_context_terms(spark, kb, tmp_path):
+    """A dictionary directory checkpointed before `dict_context_terms`
+    existed resumes its five stages and computes only the new one; the
+    corpus pass over it gives the same triples."""
+    import shutil
+
+    transcripts = spark.createDataFrame(
+        synth.gen_transcripts_pdf(kb, 10), schema=S.TRANSCRIPTS
+    )
+    raw = synth.kb_tables(spark, kb)
+    dict_dir = str(tmp_path / "dict")
+    d1 = KGPipeline(spark, dict_dir).run_dictionary(raw)
+    t1 = KGPipeline(spark, str(tmp_path / "c1")).run_corpus(
+        transcripts, d1.outputs
+    ).outputs["triples"]
+
+    shutil.rmtree(f"{dict_dir}/dict_context_terms")
+    d2 = KGPipeline(spark, dict_dir).run_dictionary(raw)
+    resumed = {s.name: s.resumed for s in d2.stages}
+    assert resumed == {
+        "dict_redirects": True,
+        "dict_surface_forms": True,
+        "dict_link_weights": True,
+        "dict_context_vectors": True,
+        "dict_context_terms": False,
+        "canonical_map": True,
+    }
+    t2 = KGPipeline(spark, str(tmp_path / "c2")).run_corpus(
+        transcripts, d2.outputs
+    ).outputs["triples"]
+    cols = ["conv_id", "turn_idx", "subj", "pred", "obj"]
+    assert t1.count() > 0
+    assert t1.select(cols).exceptAll(t2.select(cols)).count() == 0
+    assert t2.select(cols).exceptAll(t1.select(cols)).count() == 0
+
+
+# Spark jobs of one run_corpus pass (model built in the pass, 10 synth
+# conversations, local[8])
+RUN_CORPUS_MAX_JOBS = 52
+
+
+def test_run_corpus_job_count_cap(spark, kb, tmp_path):
+    """Fixed cost per pass: every Spark job of run_corpus is paid again
+    on each pass, whatever the corpus size. The cap is today's count —
+    a change that adds jobs to each pass must raise it knowingly."""
+    transcripts = spark.createDataFrame(
+        synth.gen_transcripts_pdf(kb, 10), schema=S.TRANSCRIPTS
+    )
+    d = KGPipeline(spark, str(tmp_path / "dict")).run_dictionary(
+        synth.kb_tables(spark, kb)
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("run_corpus_job_cap", "one run_corpus pass")
+    try:
+        KGPipeline(spark, str(tmp_path / "w")).run_corpus(transcripts, d.outputs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup("run_corpus_job_cap"))
+    assert 0 < jobs <= RUN_CORPUS_MAX_JOBS, jobs

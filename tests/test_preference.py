@@ -102,6 +102,33 @@ def test_bt_python_lockstep(spark):
         assert abs(out[a].strength - want[a]) < 1e-9
 
 
+def test_bt_pair_bound_forces_spark_loop(spark, monkeypatch):
+    """Few arms but more n_tot pairs than the numpy-path bound: the fit
+    must take the Spark MM loop (the numpy path would collect the whole
+    pairwise matrix) and still match the python replay."""
+    import careers_spark.operators.preference as P
+    import careers_spark.operators.similarity as SIM
+
+    arms = ["m0", "m1", "m2", "m3"]
+    pairs = [(a, b) for a in arms for b in arms if a < b] + [("m3", "m0")] * 2
+    n_pairs = 2 * len({tuple(sorted(p)) for p in pairs})  # both directions
+
+    def numpy_path_taken(*a, **k):
+        raise AssertionError("numpy path taken above the pair bound")
+
+    monkeypatch.setattr(SIM, "_np_round_half_up", numpy_path_taken)
+    monkeypatch.setattr(P, "NUMPY_MAX_PAIRS", n_pairs - 1)
+    W, want = _bt_python(pairs)
+    out = _fit(spark, pairs)
+    for a in arms:
+        assert out[a].wins == W[a]
+        assert abs(out[a].strength - want[a]) < 1e-9
+    # at the bound the numpy path runs (and trips the sentinel)
+    monkeypatch.setattr(P, "NUMPY_MAX_PAIRS", n_pairs)
+    with pytest.raises(AssertionError, match="numpy path taken"):
+        _fit(spark, pairs)
+
+
 def test_bt_self_comparisons_dropped(spark):
     out = _fit(spark, [("A", "A")] * 5 + [("A", "B")])
     assert out["A"].games == 1 and out["A"].wins == 1
